@@ -35,7 +35,6 @@ def run(
     n_events: int | None = None,
     n_files: int = 5,
     num_buckets: "int | None" = None,
-    scoped_read: bool = True,
 ) -> dict:
     """Run the CDC apply benchmark; returns the metrics dict.
 
@@ -85,11 +84,7 @@ def run(
                 fh.write(json.dumps(rec) + "\n")
                 seq += 1
 
-    sink = KeyedStateSink(
-        path=os.path.join(work, "state"),
-        num_buckets=num_buckets,
-        scoped_read=scoped_read,
-    )
+    sink = KeyedStateSink(path=os.path.join(work, "state"), num_buckets=num_buckets)
     batch_times: list[float] = []
     marks: list[float] = [time.perf_counter()]
 

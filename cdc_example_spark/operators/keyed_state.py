@@ -29,6 +29,7 @@ from __future__ import annotations
 import os
 import shutil
 import threading
+from collections.abc import Callable
 from contextlib import contextmanager
 from dataclasses import dataclass
 
@@ -39,46 +40,32 @@ from pyspark.sql.window import Window
 
 from cdc_example_spark.schemas import MESSAGES
 
-#: shuffle width for the per-batch collapse/merge: micro-batches are
-#: small by construction, so a handful of reducers beats the session's
-#: table-scale default (A/B at 20k-event batches: 22% off the p50;
-#: r4 re-sweep 4/8/16 → medians 1340/1576/1649 ms standalone — 4 takes
-#: another ~15% off the p50, the per-batch stages are task-launch
-#: bound, not width bound).
-MICROBATCH_SHUFFLE_PARTITIONS = int(
-    os.environ.get("SPARK_GRAFT_MICROBATCH_SHUFFLE", "4")
-)
+#: Shuffle width for the per-batch collapse and merge. Micro-batches
+#: are small by construction and their stages are task-launch bound, not
+#: width bound, so a handful of reducers beats the session's table-scale
+#: default.
+MICROBATCH_SHUFFLE_PARTITIONS = 4
 
-#: Largest bucket-directory count for which the streaming apply takes
-#: the ONE-JOB fused shape (filesystem bucket listing + in-plan
-#: broadcast semi-join + Observation-recovered touched set) instead of
-#: the two-job scoped shape. Past this, enumerating/reading every
-#: bucket dir per batch is the table-proportional cost scoped reads
-#: exist to avoid — a 100 TB deployment pins num_buckets in the
-#: thousands and stays on the scoped path.
-FUSED_APPLY_MAX_BUCKETS = int(
-    os.environ.get("SPARK_GRAFT_FUSED_APPLY_MAX_BUCKETS", "64")
-)
+#: Largest bucket-directory count for which the streaming apply finds
+#: its touched buckets inside the one write job (see
+#: _apply_changes_locked). Past it, reading every bucket directory per
+#: batch costs in proportion to the table, so larger layouts collect
+#: the touched set first and read only those directories. The
+#: crossover itself is unmeasured.
+FUSED_APPLY_MAX_BUCKETS = 64
 
-#: Decode split for micro-batch inputs: a batch arrives as ONE source
-#: file, which the default 128 MB split turns into ONE decode task —
-#: single-threaded from_json on a 32-core box. 512 KB parallelizes
-#: the decode (pre-fused A/B: p50 904 → 603 ms with bucket sizing);
-#: re-swept AT the fused shape in r13 — 256 KB/512 KB/1 MB/2 MB
-#: interleaved medians confirmed 512 KB still the floor (SCALE.md
-#: §4b-r13).
-MICROBATCH_DECODE_SPLIT_BYTES = int(
-    os.environ.get("SPARK_GRAFT_MICROBATCH_SPLIT_BYTES", "524288")
-)
+#: Decode split for micro-batch inputs: a batch arrives as one source
+#: file, which the default 128 MB split turns into one single-threaded
+#: from_json task. 512 KB parallelizes the decode.
+MICROBATCH_DECODE_SPLIT_BYTES = 524_288
 
 
-#: serializes SESSION-CONF scopes package-wide: two streaming queries
+#: Serializes session-conf scopes package-wide: two streaming queries
 #: sharing one session would otherwise interleave set/restore and leak
-#: the scoped profile into each other (reentrant: the REST serving
-#: path may nest through _merge while a scope is held on its thread).
-#: Also held by index_health.parquet_footer_aggregates — any scope that
-#: flips session confs must take THIS lock so snapshots never capture
-#: another scope's flipped values.
+#: the scoped profile into each other (reentrant, so scopes may nest on
+#: one thread). Also held by index_health.parquet_footer_aggregates —
+#: any scope that flips session confs must take THIS lock so snapshots
+#: never capture another scope's flipped values.
 _MICROBATCH_CONF_LOCK = threading.RLock()
 
 
@@ -91,8 +78,7 @@ def microbatch_conf(spark: SparkSession):
     re-enter AQE and pay its per-stage re-planning on every tiny stage
     of every micro-batch (A/B at 20k-event batches: p50 4.2 s with AQE
     vs 1.6 s without; narrow shuffles take it to 1.3 s). A process-wide
-    lock serializes concurrent scopes (ADVICE r3: the docstring used to
-    merely *ask* for serialization), so two streaming queries on one
+    lock serializes concurrent scopes, so two streaming queries on one
     session can't interleave set/restore; ad-hoc BATCH queries running
     concurrently on the same session are still re-profiled mid-flight —
     that is inherent to runtime session confs, and such deployments
@@ -108,10 +94,8 @@ def microbatch_conf(spark: SparkSession):
         saved = {k: conf.get(k, None) for k in keys}
         conf.set("spark.sql.adaptive.enabled", "false")
         conf.set("spark.sql.shuffle.partitions", str(MICROBATCH_SHUFFLE_PARTITIONS))
-        # see MICROBATCH_DECODE_SPLIT_BYTES: 512 KB parallelizes the
-        # one-file decode; batch inputs are small by construction, so
-        # the small-split overhead the default guards against can't
-        # bite. Re-swept at the fused shape (r13) — still the floor.
+        # batch inputs are small by construction, so the small-split
+        # overhead the default guards against can't bite
         conf.set(
             "spark.sql.files.maxPartitionBytes",
             str(MICROBATCH_DECODE_SPLIT_BYTES),
@@ -134,18 +118,15 @@ class KeyNotFoundError(Exception):
     """
 
 
-#: AUTO bucket-sizing bounds (VERDICT r7 item 5): a fresh auto-sized
-#: sink starts at the MIN (each bucket directory costs ~15 ms/batch of
-#: small-file overhead, so a toy state must not pay for 32) and grows
-#: by power-of-two re-bucketing as observed state rows per bucket
-#: exceed the target — the same direction-scaling discipline as
-#: SemDeDup's ``n_centroids_for``. The MAX is a runaway backstop; a
-#: 100 TB deployment sets ``num_buckets`` explicitly.
+#: AUTO bucket-sizing bounds: a fresh auto-sized sink starts at the MIN
+#: (each bucket directory costs ~15 ms/batch of small-file overhead, so
+#: a toy state must not pay for 32) and grows by power-of-two
+#: re-bucketing as observed state rows per bucket exceed the target —
+#: the same direction-scaling discipline as SemDeDup's
+#: ``n_centroids_for``. The MAX is a runaway backstop; a 100 TB
+#: deployment sets ``num_buckets`` explicitly.
 AUTO_MIN_BUCKETS = 8
 AUTO_MAX_BUCKETS = 4096
-#: bucket count state written BEFORE the meta file existed (the
-#: historical constructor default) — resolved for legacy layouts.
-LEGACY_DEFAULT_BUCKETS = 32
 
 
 @dataclass
@@ -157,28 +138,19 @@ class KeyedStateSink:
     #: ``None`` (the default) = AUTO: start at :data:`AUTO_MIN_BUCKETS`
     #: for fresh state, resolve the persisted count for existing state,
     #: and grow by re-bucketing when observed rows per touched bucket
-    #: exceed ``rows_per_bucket_target`` (VERDICT r7 item 5 — the sized
-    #: tier's p50 becomes the default path). An explicit int pins the
+    #: exceed ``rows_per_bucket_target``. An explicit int pins the
     #: count (and must match any persisted count — changing the bucket
     #: count of live state silently mis-addresses every key).
     num_buckets: int | None = None
-    #: VERDICT r5 item 9 (default-tier T3): when True, the per-batch
-    #: state read pins the schema and enumerates ONLY the touched
-    #: bucket directories (``basePath`` + explicit dirs), so untouched
-    #: buckets cost zero metadata work — no root-level partition
-    #: discovery, no parquet footer schema inference, no isin filter.
-    #: False keeps the whole-table-read shape for A/B comparison.
-    scoped_read: bool = True
     #: auto-mode growth threshold: rows per TOUCHED bucket observed on
     #: the merge write (free — rides the existing Observation) above
     #: which the state re-buckets to the next power of two. ~2^18 rows
     #: ≈ tens of MB per bucket file at this row shape.
     rows_per_bucket_target: int = 262_144
-    #: the TABLE's typed row schema (S14, VERDICT r9 item 3): a real
-    #: second table has different columns, so the merge/state-read
-    #: column lists derive from this instead of being hard-coded to the
-    #: reference messages table. ``key`` must name one of its fields.
-    #: The default keeps every existing call site byte-identical.
+    #: the TABLE's typed row schema: a second table has different
+    #: columns, so the merge/state-read column lists derive from this
+    #: instead of being hard-coded to the messages table. ``key`` must
+    #: name one of its fields.
     schema: "StructType | None" = None
 
     def __post_init__(self):
@@ -190,14 +162,15 @@ class KeyedStateSink:
                 f"column of the declared schema"
             )
         self._auto = self.num_buckets is None
-        # serializes merges against the auto-resize swap on THIS sink
-        # object (ADVICE r8: _maybe_grow ran outside any lock, so a
-        # concurrent REST _merge could read num_buckets mid-rebucket
-        # and write rows addressed with the old count into the new
-        # layout). Reentrant: _merge → _maybe_grow nests. Two sink
-        # OBJECTS on one path still race — auto mode is single-writer
-        # per process by contract (a 100 TB deployment pins the count).
-        self._lock = threading.RLock()
+        # Serializes every apply, resize and consistent read on THIS
+        # sink object: a write must never read num_buckets mid-rebucket
+        # or write rows addressed with the old count into the new
+        # layout, and a reader holding it sees whole batches only.
+        # Reentrant: upsert_requests holds it across its not-found
+        # check and the apply it calls, and the apply nests into
+        # _maybe_grow. Two sink OBJECTS on one path still race — auto
+        # mode is single-writer per process by contract.
+        self.lock = threading.RLock()
         # crash recovery for the re-bucket swap: a crash between
         # `rename(path, path.old)` and `rename(path.rebucket, path)`
         # leaves only `.old` (the pre-resize state, fully valid) —
@@ -223,10 +196,19 @@ class KeyedStateSink:
                 )
             self.num_buckets = persisted
         elif self.num_buckets is None:
-            self.num_buckets = (
-                LEGACY_DEFAULT_BUCKETS if self.exists() else AUTO_MIN_BUCKETS
-            )
+            if self.exists():
+                # the count is written before the first data, so only a
+                # layout from before the meta file existed lands here
+                raise ValueError(
+                    f"KeyedStateSink({self.path}): existing state has no "
+                    "persisted bucket count — pass num_buckets= the count "
+                    "it was written with"
+                )
+            self.num_buckets = AUTO_MIN_BUCKETS
         self._meta_written = persisted is not None
+        # growth signal of the last write (consumed by _maybe_grow)
+        self._last_write_rows: "int | None" = None
+        self._last_write_touched = 0
 
     # ------------------------------------------------------------------
     # helpers
@@ -245,27 +227,17 @@ class KeyedStateSink:
             list(self.schema.fields) + [StructField("bucket", LongType())]
         )
 
-    def _read_state(self, spark: SparkSession, buckets: "list[int]") -> DataFrame | None:
-        """State rows of the touched buckets, or None when no state.
+    def _state_rows(self, spark: SparkSession, buckets: "list[int]") -> DataFrame | None:
+        """State rows of ``buckets`` in the change-row shape, or None
+        when none of their directories exists.
 
-        Scoped shape: list the touched ``bucket=`` directories on the
-        driver (one existence probe per TOUCHED bucket — untouched
-        buckets are never stat'ed, which is the "metadata-only commit"
-        for them) and read them with a PINNED schema under ``basePath``.
-        vs the whole-table read this skips, per batch: the root listing
-        of all ``num_buckets`` directories, partition-value discovery,
-        and a parquet footer read for schema inference. Legacy shape
-        (``scoped_read=False``): read the root, filter buckets isin.
+        State rows carry ``is_delete`` false and a NULL ``lsn``/``ts_ms``,
+        so any change row for the same key outranks them in the winner
+        pass. Only the named ``bucket=`` directories are listed (one
+        existence probe each) and read with a PINNED schema under
+        ``basePath``: no root listing of every bucket, no
+        partition-value discovery, no parquet footer schema inference.
         """
-        if not self.scoped_read:
-            if not self.exists():
-                return None
-            try:
-                return spark.read.parquet(self.path).filter(
-                    F.col("bucket").isin(buckets)
-                )
-            except Exception:
-                return None
         dirs = [
             d
             for b in buckets
@@ -277,6 +249,14 @@ class KeyedStateSink:
             spark.read.schema(self._state_schema())
             .option("basePath", self.path)
             .parquet(*dirs)
+            .select(
+                F.col(self.key).alias("key_id"),
+                "bucket",
+                F.lit(False).alias("is_delete"),
+                *self._data_cols(),
+                F.lit(None).cast("long").alias("lsn"),
+                F.lit(None).cast("long").alias("ts_ms"),
+            )
         )
 
     def exists(self) -> bool:
@@ -287,26 +267,23 @@ class KeyedStateSink:
     def snapshot(self, spark: SparkSession) -> DataFrame:
         """Current materialized table (without the bucket column).
 
-        Reads are deliberately NOT serialized behind the sink lock (a
-        REST GET must not wait out a table-scale re-bucket), so a read
-        can land inside the swap window where ``path`` has been
-        renamed to ``.old`` but the staged dir not yet renamed in.
-        Renames are atomic, so exactly one of the two dirs holds the
-        complete pre-swap state — fall back to ``.old`` instead of
-        serving a momentarily-empty table (r9).
+        ``snapshot`` takes no lock itself. A caller that needs a
+        consistent view holds :attr:`lock` from this call through its
+        action, as ``MessageRestServer`` does on every request; applies
+        and re-buckets hold the same lock, so such a reader sees the
+        table before or after a batch, never part of one.
 
-        Durability of the RETURNED frame (ADVICE r9): the fallback
-        frame is pinned eagerly — ``.old`` is rmtree'd the moment the
-        swap completes, so a lazy plan over it would throw
+        An unlocked read can land inside the re-bucket swap window,
+        where ``path`` has been renamed to ``.old`` but the staged dir
+        not yet renamed in. Renames are atomic, so exactly one of the
+        two dirs holds the complete pre-swap state — fall back to
+        ``.old`` instead of serving a momentarily-empty table. That
+        fallback frame is pinned eagerly: ``.old`` is removed the moment
+        the swap completes, so a lazy plan over it would throw
         FileNotFoundException at the caller's action. The live-path
-        read stays lazy (the hot path must not pay a scan per GET) but
-        sets ``ignoreMissingFiles``, so an action racing a later
-        resize's rename/cleanup skips vanished files instead of
-        failing. Merges hold the sink lock and never observe the
-        window, but ``upsert_requests`` reads snapshot() UNLOCKED
-        before its merge — an unlocked read racing a concurrent resize
-        may therefore observe partial state; callers needing a
-        consistent view must serialize on the sink lock.
+        read stays lazy (a read must not pay an extra scan) but sets
+        ``ignoreMissingFiles``, so an unlocked action racing a later
+        re-bucket skips vanished files instead of failing.
         """
         # third element: if `.old` vanished between its check and read
         # (the swap + cleanup completed mid-call), the live dir is back
@@ -386,15 +363,13 @@ class KeyedStateSink:
             f.write(str(batch_id))
         os.replace(tmp, self._marker_path())
 
-    def apply_changes(
-        self,
-        changes: DataFrame,
-        batch_id: int | None = None,
-        probe_empty: bool = False,
-    ) -> bool:
-        """MERGE one micro-batch of routed changes (see envelope.route_changes).
+    def apply_changes(self, changes: DataFrame, batch_id: int | None = None) -> bool:
+        """MERGE one batch of routed changes (see envelope.route_changes).
 
         Expected columns: key_id, is_delete, after (struct), lsn, ts_ms.
+        This is the sink's one MERGE: the streaming foreachBatch and
+        the service-level ``upsert_requests``/``delete_keys`` all apply
+        through it.
 
         When ``batch_id`` is passed (foreachBatch does), a persisted
         high-watermark skips batches already fully merged — the
@@ -403,128 +378,70 @@ class KeyedStateSink:
         instead of a re-merge. Without an id the re-merge itself is
         idempotent, so correctness never depends on the marker.
 
-        ``probe_empty`` (ADVICE r12) gates the FUSED path behind a
-        1-row probe so an empty batch skips the state-side plan and the
-        no-op overwrite write job. It is OPT-IN because the probe costs
-        a real job on every busy batch (interleaved A/B at the 20k
-        tier: ~+135 ms — SCALE.md §4b-r13) while genuinely-empty
-        batches are rare on the default wiring: stateless foreachBatch
-        does not fire without new offsets, and the multi-table fan-out
-        already zero-works absent tables via its one distinct routing
-        job. Enable it for sources that can deliver rowless batches
-        (e.g. Kafka transaction markers / log compaction) via
-        ``materialize(..., probe_empty=True)``.
-
         Returns True when the batch was actually merged, False on the
         marker no-op — so callers with side-effecting per-batch hooks
         (materialize*'s ``on_batch``) can skip redeliveries instead of
-        observing duplicate (topic, batch_id) invocations (ADVICE r9).
+        observing duplicate (topic, batch_id) invocations.
         """
-        with self._lock:
-            return self._apply_changes_locked(changes, batch_id, probe_empty)
+        with self.lock:
+            return self._apply_changes_locked(changes, batch_id)
 
-    def _apply_changes_locked(
-        self, changes: DataFrame, batch_id: int | None,
-        probe_empty: bool = False,
-    ) -> bool:
+    def _apply_changes_locked(self, changes: DataFrame, batch_id: int | None) -> bool:
         spark = changes.sparkSession
         if batch_id is not None:
             last = self.last_applied_batch_id()
             if last is not None and batch_id <= last:
                 return False
-        # r5 restructure (T3 p50): ONE sort-merge compaction job instead
-        # of collapse-then-anti-join-then-union. The r4 chain was 3 jobs
-        # (collapse window + persist, bucket-distinct collect, broadcast
-        # build + write) ≈ 7 stages; the per-batch latency floor is
-        # stage/task-launch bound (r2 decomposition), so the job count
-        # IS the latency. New shape:
-        #   job 1: touched-bucket list via one collect_set agg on the
-        #          RAW changes (same set as post-collapse — no window,
-        #          no persist, no distinct; 2 stages).
-        #   job 2: union(state rows in touched buckets [lsn NULL],
-        #          change rows) → the per-key winner survives a single
-        #          window pass clustered by BUCKET — the window's own
-        #          exchange is the only shuffle, and intra-batch
-        #          collapse, MERGE anti-semantics, delete-drop and
-        #          resurrection all fall out of "first row of each
-        #          key run wins" (3 stages, no broadcast).
-        # Ordering: state rows sort after any change (lsn NULL,
-        # desc_nulls_last), changes among themselves by (lsn, ts_ms)
-        # desc — reference §4.2: LSN is the authoritative order
-        # (prototype/message.md:33-39). Honest A/B (interleaved,
-        # 20k-event batches, 32-bucket sink): steady-state medians were
-        # a WASH vs the r4 shape (872 vs 870 ms) — once JIT-warm, the
-        # saved jobs are offset by the duplicated decode scan the r4
-        # persist avoided. The shape still wins on structure (no
-        # persist/unpersist bookkeeping, no broadcast, one shuffle,
-        # fewer moving parts under concurrent streams) and composes
-        # with the levers that DID move p50: per-state bucket sizing
-        # (~15 ms/bucket-dir/batch of small-file overhead) and the
-        # 512 KB decode split in microbatch_conf (904 → 603 ms
-        # together at the sized tier).
-        #
-        # r12 (T3 margin): at auto-tier bucket counts the touched-
-        # bucket listing job itself IS ~1/3 of the batch (the per-job
-        # floor is scheduling-bound, ~300 ms under load, for a job
-        # whose real work is a 20k-row key parse). The FUSED shape
-        # drops it: list the state's bucket directories from the
-        # filesystem (zero jobs — the dirs are the truth), restrict
-        # the state side in-plan with a broadcast semi-join against
-        # the batch's distinct buckets, and recover the touched set
-        # AFTER the one write job from an Observation on the change
-        # subtree (the same free-metric discipline the write already
-        # uses for its empty-bucket cleanup). ONE job per batch.
-        # Interleaved A/B at the 20k tier: 996.6 → 921.3 ms median,
-        # every pair improved. Gated to small layouts: reading every
-        # bucket directory's state is exactly what scoped reads exist
-        # to avoid at a 4096-bucket 100 TB deployment, so layouts past
-        # FUSED_APPLY_MAX_BUCKETS keep the two-job scoped shape (the
-        # semi-join restriction does not save the LISTING/footer cost
-        # of thousands of dirs; the explicit bucket list does).
+        # The per-batch latency floor is job-launch bound, so the job
+        # count IS the latency. Both shapes run the same winner pass and
+        # overwrite (_winner_rows → _overwrite_touched) and differ only
+        # in how the touched buckets are found:
+        # - up to FUSED_APPLY_MAX_BUCKETS bucket dirs, ONE job: list the
+        #   dirs from the filesystem (zero jobs — the dirs are the
+        #   truth), restrict the state side in-plan with a broadcast
+        #   semi-join against the batch's buckets, and recover the
+        #   touched set after the write from an Observation on the
+        #   change rows. An empty batch writes nothing.
+        # - above it, TWO jobs: collect the touched set first and read
+        #   only those dirs. The semi-join would not save the listing
+        #   and footer cost of thousands of dirs; the explicit list does.
         with microbatch_conf(spark):
             ch = changes.withColumn("bucket", self._bucket(F.col("key_id")))
             existing = self._existing_buckets()
-            if self.scoped_read and len(existing) <= FUSED_APPLY_MAX_BUCKETS:
-                # ADVICE r12: an EMPTY batch must not pay the fused
-                # shape's full state-side plan + dynamic-overwrite
-                # write job. The 1-row probe that gates it is OPT-IN
-                # (see apply_changes: ~+135 ms per BUSY batch measured
-                # interleaved at the 20k tier, while the default
-                # wiring's empty cases are already zero-work — the
-                # fan-out's distinct routing job skips absent tables,
-                # and stateless foreachBatch never fires without new
-                # offsets); the scoped branch needs no probe because
-                # its collect_set job already returns no buckets on an
-                # empty batch.
-                if not probe_empty or self._batch_has_rows(ch):
-                    self._apply_fused(spark, ch, existing)
-            else:
-                buckets = (ch.agg(F.collect_set("bucket")).first()[0]) or []
-                if buckets:
-                    data_cols = self._data_cols()
-                    cu = ch.select(
-                        "key_id",
-                        "bucket",
-                        "is_delete",
-                        *[F.col(f"after.{c}").alias(c) for c in data_cols],
-                        "lsn",
-                        "ts_ms",
+            if len(existing) <= FUSED_APPLY_MAX_BUCKETS:
+                touched_obs = Observation()
+                state = self._state_rows(spark, existing)
+                if state is not None:
+                    # only touched buckets' state enters the winner
+                    # pass, so untouched buckets are never rewritten
+                    state = state.join(
+                        F.broadcast(ch.select("bucket").distinct()),
+                        on="bucket",
+                        how="left_semi",
                     )
-                    state = self._read_state(spark, buckets)
-                    if state is not None:
-                        su = state.select(
-                            F.col(self.key).alias("key_id"),
-                            "bucket",
-                            F.lit(False).alias("is_delete"),
-                            *data_cols,
-                            F.lit(None).cast("long").alias("lsn"),
-                            F.lit(None).cast("long").alias("ts_ms"),
-                        )
-                        allr = su.unionByName(cu)
-                    else:
-                        allr = cu
-                    out = self._winner_rows(allr)
-                    self._overwrite_touched(out, buckets, already_partitioned=True)
+
+                def touched() -> "list[int]":
+                    # same elision caveat as the write metric in
+                    # _overwrite_touched: re-plan the tiny distinct
+                    try:
+                        return touched_obs.get["touched"]
+                    except Exception:
+                        return [
+                            r["bucket"]
+                            for r in ch.select("bucket").distinct().collect()
+                        ]
+
+                observed = ch.observe(
+                    touched_obs, F.collect_set("bucket").alias("touched")
+                )
+                self._overwrite_touched(self._winner_rows(observed, state), touched)
+            else:
+                buckets = ch.agg(F.collect_set("bucket")).first()[0]
+                if buckets:
+                    state = self._state_rows(spark, buckets)
+                    self._overwrite_touched(
+                        self._winner_rows(ch, state), lambda: buckets
+                    )
             if batch_id is not None:
                 self._record_batch_id(batch_id)
         # auto-mode growth check runs OUTSIDE the micro-batch conf scope
@@ -534,16 +451,10 @@ class KeyedStateSink:
         self._maybe_grow(spark)
         return True
 
-    def _batch_has_rows(self, ch: DataFrame) -> bool:
-        """The fused path's empty-batch gate (ADVICE r12): a 1-row
-        probe with the limit pushed — it scans at most one split of
-        the batch side and never touches state."""
-        return bool(ch.select("bucket").limit(1).take(1))
-
     def _existing_buckets(self) -> "list[int]":
         """The state's bucket ordinals straight from the directory
         names — a filesystem listing, zero Spark jobs (the dirs ARE
-        the truth; _read_state enumerates the same names)."""
+        the truth; _state_rows reads the same names)."""
         if not os.path.isdir(self.path):
             return []
         out = []
@@ -555,12 +466,26 @@ class KeyedStateSink:
                     continue
         return sorted(out)
 
-    def _winner_rows(self, allr: DataFrame) -> DataFrame:
-        """The per-key winner pass shared by both apply shapes: one
-        window clustered by bucket; 'first row of each key run wins'
-        gives intra-batch collapse, MERGE semantics, delete-drop and
-        resurrection in a single exchange."""
+    def _winner_rows(self, ch: DataFrame, state: "DataFrame | None") -> DataFrame:
+        """The per-key winner pass: change rows projected to the state
+        shape, unioned with the touched buckets' state rows, through one
+        window clustered by bucket. Changes sort by (lsn, ts_ms) desc —
+        never trust arrival order after a shuffle; the LSN is the
+        authoritative order — and state rows (NULL lsn) after any
+        change, so 'first row of each key run wins' gives intra-batch
+        collapse, MERGE semantics, delete-drop and resurrection in a
+        single exchange."""
         data_cols = self._data_cols()
+        allr = ch.select(
+            "key_id",
+            "bucket",
+            "is_delete",
+            *[F.col(f"after.{c}").alias(c) for c in data_cols],
+            "lsn",
+            "ts_ms",
+        )
+        if state is not None:
+            allr = state.unionByName(allr)
         w = Window.partitionBy("bucket").orderBy(
             "key_id",
             F.col("lsn").desc_nulls_last(),
@@ -575,125 +500,24 @@ class KeyedStateSink:
             .select(*data_cols, "bucket")
         )
 
-    def _apply_fused(
-        self, spark: SparkSession, ch: DataFrame, existing: "list[int]"
-    ) -> None:
-        """The one-job streaming apply (small layouts — see the shape
-        comment in _apply_changes_locked): no up-front touched-bucket
-        job; the touched set rides an Observation on the change
-        subtree of the single merge-write job and feeds the
-        empty-bucket cleanup afterwards."""
-        touched_obs = Observation()
-        ch_o = ch.observe(
-            touched_obs, F.collect_set("bucket").alias("touched")
-        )
-        data_cols = self._data_cols()
-        cu = ch_o.select(
-            "key_id",
-            "bucket",
-            "is_delete",
-            *[F.col(f"after.{c}").alias(c) for c in data_cols],
-            "lsn",
-            "ts_ms",
-        )
-        state = self._read_state(spark, existing) if existing else None
-        if state is not None:
-            su = state.select(
-                F.col(self.key).alias("key_id"),
-                "bucket",
-                F.lit(False).alias("is_delete"),
-                *data_cols,
-                F.lit(None).cast("long").alias("lsn"),
-                F.lit(None).cast("long").alias("ts_ms"),
-            )
-            # in-plan replacement for the scoped read: only touched
-            # buckets' state enters the winner pass, so untouched
-            # buckets contribute no output rows and are never
-            # rewritten (the dynamic-overwrite contract unchanged)
-            su = su.join(
-                F.broadcast(ch.select("bucket").distinct()),
-                on="bucket",
-                how="left_semi",
-            )
-            allr = su.unionByName(cu)
-        else:
-            allr = cu
-        out = self._winner_rows(allr)
-        self._overwrite_touched(
-            out,
-            buckets=None,
-            already_partitioned=True,
-            touched_obs=touched_obs,
-            touched_fallback=ch.select("bucket").distinct(),
-        )
-
-    def _merge(self, spark: SparkSession, touched_keys: DataFrame, new_rows: DataFrame) -> None:
-        """Rewrite only the buckets containing ``touched_keys``."""
-        with self._lock:
-            with microbatch_conf(spark):
-                self._merge_scoped(spark, touched_keys, new_rows)
-            # the write-path operators grow state too (A12/A13): same
-            # auto-mode growth check as the streaming apply
-            self._maybe_grow(spark)
-
-    def _merge_scoped(
-        self,
-        spark: SparkSession,
-        touched_keys: DataFrame,
-        new_rows: DataFrame,
-    ) -> None:
-        """Anti-join MERGE for the write-path operators (A12/A13).
-
-        The streaming hot path uses the fused sort-merge compaction in
-        :meth:`apply_changes`; this REST-serving twin keeps the
-        broadcast anti-join shape because its inputs are request-sized
-        local frames where an extra tiny job is irrelevant and
-        ``touched_keys``/``new_rows`` arrive as separate frames.
-        (Measured r5 negative result, kept for the record: a
-        collect-the-keys LocalRelation variant was ~300 ms WORSE per
-        batch — CollectLimit adds a single-partition exchange and a
-        5k-row py4j collect costs more than the broadcast job it
-        saves.)
-        """
-        key = self.key
-        tk = touched_keys.distinct().withColumn("bucket", self._bucket(F.col(key)))
-        new_rows = new_rows.withColumn("bucket", self._bucket(F.col(key)))
-        # A request touches few keys → the bucket list fits on the
-        # driver by construction (≤ num_buckets entries).
-        buckets = [r[0] for r in tk.select("bucket").distinct().collect()]
-        if not buckets:
-            return
-
-        state = self._read_state(spark, buckets)
-        if state is not None:
-            kept = state.join(
-                F.broadcast(tk.select(key)), on=key, how="left_anti"
-            )
-            out = kept.unionByName(new_rows)
-        else:
-            out = new_rows
-        self._overwrite_touched(out, buckets)
-
     def _overwrite_touched(
-        self,
-        out: DataFrame,
-        buckets: "list[int] | None",
-        already_partitioned: bool = False,
-        touched_obs: "Observation | None" = None,
-        touched_fallback: "DataFrame | None" = None,
+        self, out: DataFrame, touched: "Callable[[], list[int]]"
     ) -> None:
         # Overwrite exactly the touched bucket directories in ONE write
         # job via dynamic partition overwrite (a per-bucket write loop is
         # num_buckets Spark jobs per micro-batch — 4× the throughput cost
-        # measured by bench_streaming.py). Reading the state files being
-        # replaced is safe: tasks write to a staging dir and the commit
-        # (directory swap) happens only after the job — i.e. after all
-        # reads — complete. Dynamic mode skips a bucket whose keys were
-        # ALL deleted (zero output rows), so those stale directories are
-        # removed explicitly, detected via an Observation on the same
-        # write job (a separate counting job would double the per-batch
-        # job count). (With a lakehouse table format this whole method is
-        # a single MERGE INTO.)
+        # measured by bench_streaming.py). `out` arrives hash-partitioned
+        # by bucket from the winner window's exchange, so each task
+        # writes one file per bucket with no extra shuffle. Reading the
+        # state files being replaced is safe: tasks write to a staging
+        # dir and the commit (directory swap) happens only after the
+        # job — i.e. after all reads — complete. Dynamic mode skips a
+        # bucket whose keys were ALL deleted (zero output rows), so
+        # those stale directories are removed explicitly, detected via
+        # an Observation on the same write job (a separate counting job
+        # would double the per-batch job count). `touched` resolves the
+        # touched bucket set after the write. (With a lakehouse table
+        # format this whole method is a single MERGE INTO.)
         obs = Observation()
         # n_rows rides the same write-job Observation for free: in auto
         # mode it is the growth signal (state rows of the touched
@@ -703,19 +527,12 @@ class KeyedStateSink:
             F.collect_set("bucket").alias("nonempty"),
             F.count(F.lit(1)).alias("n_rows"),
         )
-        if not already_partitioned:
-            # the streaming path arrives hash-partitioned by bucket from
-            # its window exchange — re-repartitioning there would add a
-            # shuffle; the REST path needs the clustering for one file
-            # per (task, bucket).
-            observed = observed.repartition(max(len(buckets or []), 1), F.col("bucket"))
         # persist the count the data is about to be hashed with BEFORE
-        # the data lands (ADVICE r8 high): a crash between an 8-way
-        # first write and a post-write meta would otherwise restart as
-        # the 32-way legacy resolution — every key silently
-        # mis-addressed. Meta-then-crash is safe: a count with no data
-        # resolves to exactly that count for the retried write.
-        if not getattr(self, "_meta_written", False):
+        # the data lands: a crash between a first write and a post-write
+        # meta would leave state that names no count. Meta-then-crash is
+        # safe: a count with no data resolves to exactly that count for
+        # the retried write.
+        if not self._meta_written:
             self._write_meta()
             self._meta_written = True
         (
@@ -731,29 +548,17 @@ class KeyedStateSink:
             written = int(metrics["n_rows"])
         except Exception:
             # PropagateEmptyRelation elides the CollectMetrics node when
-            # `out` is statically empty (write-path deletes against
-            # empty state), and AQE's runtime empty-relation propagation
-            # does the same for plans that turn out empty mid-query
-            # (streaming deletes-only batch on empty state) — either
-            # way the metric never fires. Re-evaluating the (empty)
-            # plan is safe and yields no buckets; both branches are
-            # pinned by test_merge_metric_fallback_on_statically_empty_plan.
+            # `out` is statically empty, and AQE's runtime empty-relation
+            # propagation does the same for plans that turn out empty
+            # mid-query (deletes-only batch on empty state) — either way
+            # the metric never fires. Re-evaluating the (empty) plan is
+            # safe and yields no buckets; both branches are pinned by
+            # test_merge_metric_fallback_on_statically_empty_plan.
             nonempty = {
                 r["bucket"]
                 for r in out.groupBy("bucket").count().filter("count > 0").collect()
             }
-        if buckets is None:
-            # fused shape: the touched set rode the write job's change
-            # subtree (touched_obs) — resolved HERE, after the action.
-            # Same elision caveat as the write metric: if the plan was
-            # statically/runtime empty the metric never fires, and the
-            # tiny distinct re-plan is the safe fallback.
-            try:
-                buckets = sorted(set(touched_obs.get["touched"]))
-            except Exception:
-                buckets = sorted(
-                    r["bucket"] for r in touched_fallback.distinct().collect()
-                ) if touched_fallback is not None else sorted(nonempty)
+        buckets = touched()
         for b in buckets:
             if b not in nonempty:
                 shutil.rmtree(os.path.join(self.path, f"bucket={b}"), ignore_errors=True)
@@ -777,13 +582,13 @@ class KeyedStateSink:
         """
         if not self._auto:
             return
-        with self._lock:
+        with self.lock:
             self._maybe_grow_locked(spark)
 
     def _maybe_grow_locked(self, spark: SparkSession) -> None:
-        written = getattr(self, "_last_write_rows", None)
-        touched = getattr(self, "_last_write_touched", 0)
-        # consume the observation NOW (ADVICE r8): a later batch that
+        written = self._last_write_rows
+        touched = self._last_write_touched
+        # consume the observation NOW: a later batch that
         # performs no write (empty micro-batch, no touched buckets)
         # re-enters this check, and a stale density multiplied by the
         # already-grown count would double the buckets again on every
@@ -809,7 +614,7 @@ class KeyedStateSink:
             if new_count != self.num_buckets:
                 self._rebucket(spark, new_count)
             return
-        # shrink path (VERDICT r8 item 7): after a mass delete a grown
+        # shrink path: after a mass delete a grown
         # state would serve a handful of rows as hundreds of small
         # files forever. Two guards keep it from thrashing: (1) the
         # batch must have touched ≥ half the buckets — the extrapolated
@@ -852,10 +657,9 @@ class KeyedStateSink:
         if os.path.exists(marker):
             shutil.copy2(marker, os.path.join(staged, os.path.basename(marker)))
         # stage the NEW count's meta beside the marker so the directory
-        # swap commits data+meta atomically (ADVICE r8 high): a crash
-        # between the swap and a post-swap meta write would leave live
-        # state hashed new_count-way that __post_init__ then resolves
-        # as the 32-way legacy layout — every key mis-addressed.
+        # swap commits data+meta atomically: live state is never hashed
+        # with a count its meta does not name (a mismatch would
+        # mis-address every key).
         with open(os.path.join(staged, "_num_buckets"), "w") as f:
             f.write(str(new_count))
         old = self.path + ".old"
@@ -873,11 +677,11 @@ class KeyedStateSink:
     def upsert_requests(self, requests: DataFrame, now) -> DataFrame:
         """Batch twin of MessageService.upsertMessage (MessageService.kt:18-34).
 
-        Returns the saved row images (generated ids included) — the
-        analog of the reference's read-back-and-return
+        Returns the saved row images (generated ids included), one per
+        request row — the analog of the reference's read-back-and-return
         (MessageService.kt:33, "read back to return the correct time
-        stamps"); here the materialized ``new_rows`` ARE the written
-        values, so no second read is needed.
+        stamps"); here the materialized rows ARE the written values, so
+        no second read is needed.
 
         ``requests``: columns (id nullable, username, message). Semantics:
         - id NULL → insert with generated uuid, create_time = update_time = now
@@ -887,52 +691,69 @@ class KeyedStateSink:
           update_time;
         - id present & missing → KeyNotFoundError
           (MessageService.kt:23-24).
+
+        The rows apply through :meth:`apply_changes` with request order
+        as their ``lsn``, so rows naming the same id collapse to the
+        last one, as if the requests ran one after another. The sink
+        lock is held from the not-found check through the write, the
+        engine analog of the reference's SERIALIZABLE transaction.
         """
         spark = requests.sparkSession
         now_col = F.lit(now).cast("timestamp")
-        state = self.snapshot(spark)
+        requests = requests.withColumn("lsn", F.monotonically_increasing_id())
+        with self.lock:
+            state = self.snapshot(spark)
+            with_id = requests.filter(F.col("id").isNotNull())
+            missing = with_id.join(state.select("id"), on="id", how="left_anti")
+            hit = missing.select("id").take(1)  # one driver round trip, not two
+            if hit:
+                raise KeyNotFoundError(f"update of non-existent key: {hit[0][0]}")
 
-        with_id = requests.filter(F.col("id").isNotNull())
-        missing = with_id.join(state.select("id"), on="id", how="left_anti")
-        hit = missing.select("id").take(1)  # one driver round trip, not two
-        if hit:
-            raise KeyNotFoundError(f"update of non-existent key: {hit[0][0]}")
-
-        inserts = requests.filter(F.col("id").isNull()).select(
-            F.expr("uuid()").alias("id"),
-            now_col.alias("create_time"),
-            now_col.alias("update_time"),
-            "message",
-            "username",
-        )
-        updates = (
-            with_id.alias("r")
-            .join(state.alias("s"), on="id", how="inner")
-            .select(
-                F.col("id"),
-                # create_time preserved from existing row
-                F.col("s.create_time").alias("create_time"),
+            inserts = requests.filter(F.col("id").isNull()).select(
+                F.expr("uuid()").alias("id"),
+                now_col.alias("create_time"),
                 now_col.alias("update_time"),
-                F.col("r.message").alias("message"),
-                F.col("r.username").alias("username"),
+                "message",
+                "username",
+                "lsn",
             )
-        )
-        # uuid() is NON-deterministic: _merge evaluates new_rows in two
-        # actions (the touched-bucket collect and the overwrite write).
-        # If re-evaluation generated different ids, written rows could
-        # hash into buckets absent from the collected list — and dynamic
-        # partition overwrite would then replace those directories with
-        # ONLY the new rows, silently dropping the live keys that were
-        # never read into `kept`. Materialize the generated ids once so
-        # both actions see identical keys.
-        new_rows = inserts.unionByName(updates).localCheckpoint(eager=True)
-        touched = new_rows.select(F.col("id").alias(self.key)).distinct()
-        self._merge(spark, touched, new_rows)
-        return new_rows
+            updates = (
+                with_id.alias("r")
+                .join(state.alias("s"), on="id", how="inner")
+                .select(
+                    F.col("id"),
+                    # create_time preserved from existing row
+                    F.col("s.create_time").alias("create_time"),
+                    now_col.alias("update_time"),
+                    F.col("r.message").alias("message"),
+                    F.col("r.username").alias("username"),
+                    F.col("r.lsn").alias("lsn"),
+                )
+            )
+            # uuid() is NON-deterministic and the apply reads its input
+            # more than once (the write job and the touched-bucket
+            # fallback). Materialize the generated ids once so every
+            # read, and the returned rows, see identical keys.
+            new_rows = inserts.unionByName(updates).localCheckpoint(eager=True)
+            self.apply_changes(
+                new_rows.select(
+                    F.col("id").alias("key_id"),
+                    F.lit(False).alias("is_delete"),
+                    F.struct(*self._data_cols()).alias("after"),
+                    "lsn",
+                    F.col("lsn").alias("ts_ms"),
+                )
+            )
+        return new_rows.drop("lsn")
 
     def delete_keys(self, keys: DataFrame) -> None:
         """Batch twin of MessageService.deleteMessage (MessageService.kt:36-39)."""
-        spark = keys.sparkSession
-        touched = keys.select(F.col(keys.columns[0]).alias(self.key)).distinct()
-        empty = spark.createDataFrame([], self.schema)
-        self._merge(spark, touched, empty)
+        self.apply_changes(
+            keys.select(
+                F.col(keys.columns[0]).alias("key_id"),
+                F.lit(True).alias("is_delete"),
+                F.lit(None).cast(self.schema).alias("after"),
+                F.lit(0).cast("long").alias("lsn"),
+                F.lit(0).cast("long").alias("ts_ms"),
+            )
+        )

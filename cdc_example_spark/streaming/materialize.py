@@ -76,17 +76,8 @@ def materialize(
     agg_sinks: "Sequence[object] | None" = None,
     converter: str = "json",
     registry_url: "str | None" = None,
-    probe_empty: bool = False,
 ) -> StreamingQuery:
     """Start the decode→route→apply query against ``sink``.
-
-    ``probe_empty`` — pass True when the source can deliver rowless
-    micro-batches (Kafka transaction markers, log compaction): the
-    sink then gates its fused merge behind a 1-row probe so an empty
-    batch skips the state-side plan and the no-op write job (ADVICE
-    r12). Off by default: the probe is a real job on every busy batch
-    (~+135 ms interleaved at the 20k tier — SCALE.md §4b-r13), and
-    file/default sources never fire foreachBatch without rows.
 
     ``converter`` selects the envelope wire format — ``"json"``
     (JsonConverter, the reference's active config) or ``"avro"``
@@ -133,9 +124,7 @@ def materialize(
                 snap = sink.snapshot(batch_df.sparkSession)
                 for agg in agg_sinks:
                     agg.apply_changes(batch_df, snap, batch_id=batch_id)
-            merged = sink.apply_changes(
-                batch_df, batch_id, probe_empty=probe_empty
-            )
+            merged = sink.apply_changes(batch_df, batch_id)
             if on_batch is not None and merged:
                 on_batch(batch_df, batch_id)
         finally:

@@ -30,11 +30,12 @@ error text (the reference's ``MessageNotFoundException`` is an unmapped
 RuntimeException → Spring's default 500; a typed status is the honest
 HTTP translation of the same contract).
 
-Threading: ``ThreadingHTTPServer`` with requests serialized through one
-lock around the sink — the engine analog of the reference's
-SERIALIZABLE transaction (``MessageService.kt:18``); Spark sessions are
-driver-side objects and the sink's MERGE is not concurrency-safe within
-a process.
+Threading: ``ThreadingHTTPServer`` with every request serialized on
+the sink's own ``lock`` — the one the streaming apply and re-bucket
+hold — the engine analog of the reference's SERIALIZABLE transaction
+(``MessageService.kt:18``). A GET holds it from ``snapshot`` through
+``collect``, so it returns the table before or after a batch, never
+part of one; a POST holds it across the not-found check and the write.
 
 Scope note: at scale an analytics engine's ingestion API is its source
 connectors (Kafka CDC); this endpoint is the low-volume operational
@@ -86,7 +87,6 @@ class MessageRestServer:
     def __init__(self, spark: SparkSession, sink: KeyedStateSink, clock=None):
         self._spark = spark
         self._sink = sink
-        self._lock = threading.Lock()
         # injectable clock, like the reference's java.time.Clock bean
         self._clock = clock or (lambda: dt.datetime.now(dt.timezone.utc))
         self._httpd: ThreadingHTTPServer | None = None
@@ -107,7 +107,7 @@ class MessageRestServer:
         if not isinstance(username, str) or not isinstance(message, str):
             raise ValueError("username and message are required strings")
         now = self._clock().replace(tzinfo=None)  # sink stores naive-UTC
-        with self._lock:
+        with self._sink.lock:
             reqs = self._spark.createDataFrame(
                 [(req_id, username, message)], "id STRING, username STRING, message STRING"
             )
@@ -115,12 +115,12 @@ class MessageRestServer:
         return _row_json(saved[0])
 
     def _delete(self, message_id: str) -> None:
-        with self._lock:
+        with self._sink.lock:
             keys = self._spark.createDataFrame([(message_id,)], "id STRING")
             self._sink.delete_keys(keys)
 
     def _list(self) -> list[dict]:
-        with self._lock:
+        with self._sink.lock:
             rows = (
                 self._sink.snapshot(self._spark)
                 .orderBy("create_time", "id")

@@ -1,4 +1,4 @@
-"""Outbound sinks: the reference's serialize + fan-out path (A9/A10/A16).
+"""Outbound sinks: the reference's serialize + fan-out path (A9/A10).
 
 ``ws_frames`` reproduces the WsEvent wire format
 (MessageWebSocketHandler.kt:68-77): ``{type: UPSERT|DELETE, id,
@@ -58,12 +58,3 @@ def broadcast_frames(
                 errors.append(exc)
     return errors
 
-
-def console_tap(routed: DataFrame, num_rows: int = 20):
-    """Debug tap (A16, debug.html analog): raw frames to the console."""
-    return (
-        ws_frames(routed)
-        .writeStream.format("console")
-        .option("truncate", "false")
-        .option("numRows", str(num_rows))
-    )

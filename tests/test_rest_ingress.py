@@ -96,3 +96,71 @@ def test_rest_update_missing_id_is_404_and_bad_body_400(server):
 
     code, _ = _call(srv.port, "GET", "/api/nope")
     assert code == 404
+
+
+def test_rest_get_waits_out_a_concurrent_apply(spark, tmp_path, monkeypatch):
+    """A GET that arrives while a streaming apply is committing waits for
+    the apply and then serves the whole post-batch id set — never the
+    partial table of a half-committed bucket rewrite. The apply is held
+    inside _overwrite_touched with one bucket directory moved aside,
+    the window where dynamic partition overwrite has removed a bucket's
+    old files but not yet moved its new ones in."""
+    import os
+    import threading
+
+    from cdc_example_spark.streaming.envelope import decode_envelope, route_changes
+    from tests.cdc_fixtures import envelope, row_image
+
+    t = "2025-10-26T23:21:07.598794Z"
+    sink = KeyedStateSink(path=str(tmp_path / "state"), num_buckets=8)
+
+    def apply(records):
+        raw = spark.createDataFrame(records, "key STRING, value STRING")
+        sink.apply_changes(route_changes(decode_envelope(raw)))
+
+    pre = {f"k{i:02d}" for i in range(24)}
+    apply([envelope("i", k, after=row_image(k, t, t, "m", "ann")) for k in sorted(pre)])
+    post = (pre - {"k00", "k01"}) | {f"n{i:02d}" for i in range(20)}
+    batch = [envelope("d", k, after=None) for k in ("k00", "k01")] + [
+        envelope("i", k, after=row_image(k, t, t, "m", "bob"))
+        for k in sorted(post - pre)
+    ]
+
+    entered, release = threading.Event(), threading.Event()
+    real_overwrite = KeyedStateSink._overwrite_touched
+
+    def held_overwrite(self, out, touched):
+        victim = os.path.join(
+            self.path, min(d for d in os.listdir(self.path) if d.startswith("bucket="))
+        )
+        os.rename(victim, victim + ".aside")
+        entered.set()
+        assert release.wait(120)
+        os.rename(victim + ".aside", victim)
+        return real_overwrite(self, out, touched)
+
+    monkeypatch.setattr(KeyedStateSink, "_overwrite_touched", held_overwrite)
+    srv = MessageRestServer(spark, sink).start()
+    try:
+        applier = threading.Thread(target=apply, args=(batch,))
+        applier.start()
+        assert entered.wait(120)
+        got = {}
+
+        def get():
+            got["code"], got["body"] = _call(srv.port, "GET", "/api/messages")
+            got["after_release"] = release.is_set()
+
+        getter = threading.Thread(target=get)
+        getter.start()
+        getter.join(3.0)
+        assert "code" not in got, "GET returned while the apply was mid-commit"
+        release.set()
+        applier.join(120)
+        getter.join(120)
+    finally:
+        release.set()
+        srv.stop()
+    assert got["code"] == 200 and got["after_release"]
+    ids = {m["id"] for m in got["body"]}
+    assert ids in (pre, post), sorted(ids)

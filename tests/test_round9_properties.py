@@ -189,13 +189,15 @@ def test_resize_serializes_against_concurrent_merge(spark, tmp_path, monkeypatch
         order.append("rebucket_done")
 
     monkeypatch.setattr(KeyedStateSink, "_rebucket", held_rebucket)
-    real_merge_scoped = KeyedStateSink._merge_scoped
+    real_apply = KeyedStateSink._apply_changes_locked
 
-    def traced_merge_scoped(self, *a, **kw):
-        order.append("merge_start")
-        return real_merge_scoped(self, *a, **kw)
+    def traced_apply(self, *a, **kw):
+        # the grower's own apply runs this body too; record the writer's
+        if threading.current_thread().name == "writer":
+            order.append("merge_start")
+        return real_apply(self, *a, **kw)
 
-    monkeypatch.setattr(KeyedStateSink, "_merge_scoped", traced_merge_scoped)
+    monkeypatch.setattr(KeyedStateSink, "_apply_changes_locked", traced_apply)
 
     grower = threading.Thread(
         target=lambda: sink.apply_changes(_changes(spark, 200), batch_id=1)
@@ -212,7 +214,7 @@ def test_resize_serializes_against_concurrent_merge(spark, tmp_path, monkeypatch
         sink.upsert_requests(req, "2025-10-26T23:59:00Z")
         upsert_done.set()
 
-    writer = threading.Thread(target=do_upsert)
+    writer = threading.Thread(target=do_upsert, name="writer")
     writer.start()
     # give the writer ample time to reach the lock; it must NOT merge
     writer.join(3.0)

@@ -32,7 +32,11 @@ def test_tiny_input_gets_floor_width_no_aqe(tmp_path):
     assert prof["spark.sql.adaptive.enabled"] == "false"
 
 
-def test_mid_input_width_graduates(tmp_path):
+def test_mid_input_width_graduates(tmp_path, monkeypatch):
+    # pin the core-count cap so 200 MB graduates to 25 on any host
+    import cdc_example_spark.session as session
+
+    monkeypatch.setattr(session, "DEFAULT_SHUFFLE_PARTITIONS", 32)
     prof = scale_profile(_dir_with_parquet(tmp_path, 200 * 1024**2))
     assert prof["spark.sql.shuffle.partitions"] == "25"
 
