@@ -189,11 +189,11 @@ def main() -> None:
     cold: dict[str, float] = {}
     construct: dict[str, float] = {}
     resubmit: dict[str, float] = {}
-    # Per-query cold → fresh×3 → resubmit, deliberately interleaved: the
-    # fresh runs right after the same query's cold run measure with that
-    # plan shape's generated code hot in the JIT/code cache — a phased
-    # all-colds-then-all-fresh ordering was measured 70% SLOWER on the
-    # fresh tier (the 60+ plan shapes evict each other between passes).
+    # Per-query cold → fresh×3 → resubmit, interleaved: each query's
+    # fresh runs follow its own cold run, with no other plan shape run
+    # in between. Generated classes stay cached across plan shapes
+    # (session.CODEGEN_CACHE_ENTRIES), so the ordering does not decide
+    # whether fresh runs recompile.
     # The reported fresh number is the per-query MEDIAN of three runs:
     # single samples on a shared host swing ±15% (BASELINE.md), and the
     # median keeps one noisy sample from repainting the whole headline.

@@ -11,6 +11,17 @@ Pins the session to the engine's determinism + performance contract:
   nanosecond timestamps which Spark's vectorized parquet reader rejects;
   we read them as raw int64 nanos and convert in the loader
   (see sources/catalog.py).
+- ``spark.sql.codegen.cache.maxEntries`` sized to the engine's plan-shape
+  working set (``CODEGEN_CACHE_ENTRIES``), so fresh re-submissions reuse
+  their generated classes instead of recompiling them.
+
+Static-conf precondition: the generated-class cache is built once per
+JVM, when Spark's code generator is first used (normally the first code
+compile), from whatever the session conf says then. A session built
+elsewhere keeps Spark's 100 entries and thrashes on mixed workloads: the
+driver's vanilla session that calls ``__spark_entry__``, or a JVM session
+that already existed when ``get_spark``'s ``getOrCreate`` ran
+(``getOrCreate`` does not re-apply static confs to a live session).
 """
 
 from __future__ import annotations
@@ -31,6 +42,16 @@ DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # of this profile, but its savings only materialize when stages are
 # big enough to amortize the re-plan.
 SMALL_INPUT_BYTES = 2 * 1024**3
+
+# Entries in Spark's generated-class cache (spark.sql.codegen.cache.
+# maxEntries, default 100). The 116 registered queries compile 1,835
+# distinct classes at sf0.01 (scripts/codegen_working_set.py), so 4096
+# keeps the whole plan-shape working set with ~2x headroom. At 100, the
+# 8 batch_mix queries alone (119 classes) evicted what the next query
+# needed, and every fresh Dataset.ofRows re-submission recompiled its
+# classes (~3 s of compile per 10 s batch_mix window). Re-run the probe
+# when queries are added.
+CODEGEN_CACHE_ENTRIES = 4096
 
 
 def scale_profile(sf_dir: str) -> dict[str, str]:
@@ -95,15 +116,17 @@ def get_spark(
         # multi-hundred-stage session and slows job scheduling; an
         # embedded engine has no use for the web UI.
         .config("spark.ui.enabled", "false")
-        # a 60-plan-shape workload overflows the JVM's default 240 MB
-        # JIT code cache: whole-stage-codegen classes evict each other
-        # and hot queries keep re-compiling (measured −9% on the full
-        # declared-set bench with 1g). Executors JIT the same generated
-        # classes, so the cluster deployment sets both sides.
+        # the JVM's native code cache (JIT-compiled machine code) grows
+        # from its 240 MB default to 1 GB, and flushes cold methods when
+        # full instead of stopping the JIT. Executors JIT the same
+        # generated classes, so the cluster deployment sets both sides.
+        # Recompiles of generated classes are governed by the codegen
+        # cache size set below, not by this flag.
         .config("spark.driver.extraJavaOptions",
                 "-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing")
         .config("spark.executor.extraJavaOptions",
                 "-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -205,17 +205,13 @@ def test_broadcast_threshold_parser_covers_spark_legal_sizes():
     assert _broadcast_threshold_bytes(_FakeSpark(None)) == 0
 
 
-def test_cc_probe_round_equals_full_unroll():
+def test_cc_probe_round_equals_full_unroll(spark):
     """r14 pin (VERDICT r13 item 4): probe_round must yield EXACTLY the
     full unroll's labels in both probe outcomes — (a) a near-clique
     graph converged by the probe round (shallow plan emitted), (b) a
     path graph NOT converged at the probe round (probe falls through to
     the full declared unroll)."""
-    from pyspark.sql import SparkSession
-
     from cdc_example_spark.operators.graph import connected_components
-
-    spark = SparkSession.builder.master("local[2]").getOrCreate()
 
     def run(edges, rounds, probe):
         df = spark.createDataFrame(edges, "src long, dst long")
